@@ -74,6 +74,15 @@ def release_rdds(spark, ids) -> int:
     return n
 
 
+def checkpoint_rdd_id(df: DataFrame) -> int | None:
+    """Id of the RDD a ``checkpoint``-ed DataFrame reads (the LogicalRDD
+    localCheckpoint persisted), or None if the internal probe fails."""
+    try:
+        return int(df._jdf.queryExecution().analyzed().rdd().id())
+    except Exception:  # plan shape changed across Spark versions
+        return None
+
+
 class CheckpointRotator:
     """Bound live checkpoint blocks in a driver loop to the latest iteration.
 
@@ -113,26 +122,22 @@ class CheckpointRotator:
         mis-attributed and freed by this rotator (ADVICE r2).
         """
         out = checkpoint(df)
-        try:
-            # the exact RDD localCheckpoint persisted: the LogicalRDD the
-            # returned Dataset wraps
-            gen = {int(out._jdf.queryExecution().analyzed().rdd().id())}
-        except Exception:  # plan shape changed across Spark versions
+        rdd_id = checkpoint_rdd_id(out)
+        if rdd_id is None and not CheckpointRotator._probe_warned:
             # Warn once instead of silently reintroducing the r1
             # checkpoint-block leak (6-7x bench bloat) — a Spark upgrade
             # that breaks this internal probe must be visible (ADVICE r3).
-            if not CheckpointRotator._probe_warned:
-                CheckpointRotator._probe_warned = True
-                import warnings
+            CheckpointRotator._probe_warned = True
+            import warnings
 
-                warnings.warn(
-                    "CheckpointRotator: LogicalRDD-id probe failed (internal"
-                    " Spark API changed?); checkpointed blocks will NOT be"
-                    " freed and long fusion loops may leak storage memory",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            gen = set()
+            warnings.warn(
+                "CheckpointRotator: LogicalRDD-id probe failed (internal"
+                " Spark API changed?); checkpointed blocks will NOT be"
+                " freed and long fusion loops may leak storage memory",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        gen = set() if rdd_id is None else {rdd_id}
         self._gens.append(gen)
         while len(self._gens) > self._keep:
             release_rdds(self._spark, self._gens.pop(0))
@@ -165,12 +170,6 @@ def argmax_per_fact(scored: DataFrame, score: Column, value_col: str) -> DataFra
     window form)."""
     return _pick_per_fact(
         scored, F.struct((-score).alias("k1"), F.col(value_col).alias("k2"))
-    )
-
-
-def argmin_per_fact(scored: DataFrame, score: Column, value_col: str) -> DataFrame:
-    return _pick_per_fact(
-        scored, F.struct(score.alias("k1"), F.col(value_col).alias("k2"))
     )
 
 
@@ -218,14 +217,6 @@ def snap_to_claimed(num_claims: DataFrame, truth_est: DataFrame) -> DataFrame:
     )
 
 
-def fact_stddev(num_claims: DataFrame, eps: float) -> DataFrame:
-    """Per-fact population std (np.std is ddof=0 — SURVEY §2.6 W3) floored at
-    eps; the loss denominator CRH reuses every iteration (crh.py:55)."""
-    return num_claims.groupBy(*FACT_KEYS).agg(
-        F.greatest(F.stddev_pop("value_num"), F.lit(eps)).alias("denom")
-    )
-
-
 def assemble_truth(
     cat_truth: DataFrame | None, num_truth: DataFrame | None
 ) -> DataFrame:
@@ -258,7 +249,3 @@ def assemble_truth(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def weights_to_triples_weights(weights: DataFrame) -> DataFrame:
-    return weights.select(*WEIGHT_KEYS, "weight")

@@ -1,10 +1,10 @@
-"""CRH truth discovery as iterated DataFrame aggregations.
+"""CRH truth discovery over a fact-grouped claim matrix.
 
 Re-expresses the reference's per-bucket numpy loops (crh.py:26-103) as one
 vectorized dataflow over *all* buckets at once: the fact key is
 (bucket_id, entity, attr), the weight key is (bucket_id, source).
 
-Per iteration (reference semantics, verified against crh.py):
+Reference semantics (verified against crh.py):
 
   weight step (update_w, crh.py:40-62):
     loss per claim = 1[v != truth]                       (categorical)
@@ -21,16 +21,18 @@ Per iteration (reference semantics, verified against crh.py):
 Init truth = mode / exact median (initialize_truth, crh.py:92-103).
 Iterations fixed (reference while itr < max_itr with no convergence break).
 
-Scale notes: claims are cached once; each iteration produces two small-ish
-DataFrames (weights: |sources|·|buckets| rows → broadcast join back;
-truth: one row per fact → shuffle join on the fact key, AQE skew-handled).
-Lineage is truncated every iteration (localCheckpoint; Iceberg snapshot on a
-real cluster) so plans stay constant-size across iterations.
+Layout: the claims are shuffled once per run, into the claim matrix — one
+row per fact and branch (a mixed-type fact scores its numeric and
+categorical claims as two facts) holding the fact's claims as a sorted
+array, its loss denominator, its distinct candidates and its initial truth.
+The matrix is checkpointed once; an iteration is then one narrow pass over
+it (truth per fact from the broadcast per-bucket weight maps, per-claim
+losses exploded from it) plus one aggregation of |sources|·|buckets| rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trustfuse_spark.operators.fusion.base import (
@@ -38,84 +40,97 @@ from trustfuse_spark.operators.fusion.base import (
     WEIGHT_KEYS,
     CheckpointRotator,
     FusionResult,
-    argmax_per_fact,
-    argmin_per_fact,
     assemble_truth,
     checkpoint,
-    fact_stddev,
-    median_per_fact,
-    mode_per_fact,
-    split_claims,
+    checkpoint_rdd_id,
+    release_rdds,
 )
 
 
-def _flag_claims(cat: DataFrame, num_with_denom: DataFrame) -> DataFrame:
-    """Static union of both claim branches with a type flag — built ONCE
-    before the loop so every iteration's loss computation is a single join
-    on (fact key, branch) instead of two joins + a union (one exchange less
-    per iteration; the per-iteration fixed latency is what caps scaling
-    efficiency at small per-core work, BENCH/BASELINE.md)."""
-    c = cat.select(
-        *FACT_KEYS,
-        "source",
-        F.lit(False).alias("__isnum"),
-        "value_str",
-        F.lit(None).cast("double").alias("value_num"),
-        F.lit(1.0).alias("denom"),
+def _claim_matrix(claims: DataFrame, eps: float) -> DataFrame:
+    """One row per (fact, branch): the only shuffle of claim-sized data.
+
+    ``claims`` is sorted so every per-fact float sum folds in the same
+    order whatever the input partitioning; ``denom`` is the population std
+    (np.std, ddof=0 — SURVEY §2.6 W3) floored at eps; the initial truth is
+    the mode (ties -> smallest value, pandas ``mode().iloc[0]``) or the
+    exact ``percentile`` median (np.median, never percentile_approx)."""
+    is_num = F.col("value_num").isNotNull()
+    cat_value = F.when(~is_num, F.col("value_str"))
+    return claims.groupBy(*FACT_KEYS, is_num.alias("is_num")).agg(
+        F.array_sort(
+            F.collect_list(F.struct("source", "value_str", "value_num"))
+        ).alias("claims"),
+        F.greatest(F.stddev_pop("value_num"), F.lit(eps)).alias("denom"),
+        F.collect_set(cat_value).alias("cand_str"),
+        F.collect_set("value_num").alias("cand_num"),
+        F.mode(cat_value, deterministic=True).alias("truth_str"),
+        F.expr("percentile(value_num, 0.5)").alias("truth_num"),
     )
-    n = num_with_denom.select(
-        *FACT_KEYS,
-        "source",
-        F.lit(True).alias("__isnum"),
-        F.lit(None).cast("string").alias("value_str"),
-        "value_num",
-        "denom",
-    )
-    return c.unionByName(n)
 
 
-def _truth_union(cat_truth: DataFrame, num_truth: DataFrame) -> DataFrame:
-    return cat_truth.select(
-        *FACT_KEYS,
-        F.lit(False).alias("__isnum"),
-        "truth_str",
-        F.lit(None).cast("double").alias("truth_num"),
-    ).unionByName(
-        num_truth.select(
-            *FACT_KEYS,
-            F.lit(True).alias("__isnum"),
-            F.lit(None).cast("string").alias("truth_str"),
-            "truth_num",
+def _best(cands: str, key) -> Column:
+    """The candidate with the smallest ``key(candidate)``; ties go to the
+    smaller candidate (struct order), so the smallest string or number wins
+    whatever order the candidates are in."""
+    return F.array_min(
+        F.transform(cands, lambda v: F.struct(key(v).alias("k"), v.alias("v")))
+    )["v"]
+
+
+def _truth(matrix: DataFrame, weights: DataFrame) -> DataFrame:
+    """The matrix with truth_i in place of truth_{i-1}, scored against the
+    per-bucket weight maps (|sources| entries each) broadcast on bucket_id;
+    a narrow projection, no shuffle of the matrix."""
+    is_num = F.col("is_num")
+    maps = weights.groupBy("bucket_id").agg(
+        F.map_from_entries(F.collect_list(F.struct("source", "weight"))).alias("w")
+    )
+
+    def w(c):
+        return F.col("w")[c["source"]]
+
+    def vote(v):  # categorical: argmax of the weight sum of v's claimers
+        return -F.aggregate(
+            F.filter("claims", lambda c: c["value_str"] == v),
+            F.lit(0.0),
+            lambda acc, c: acc + w(c),
         )
+
+    # numeric: argmin of Σ w·(v - claim)^2 / denom, summed term by term as
+    # the reference does (an A - 2vB + v²C expansion cancels and can flip
+    # near-ties)
+    def loss(v):
+        return F.aggregate(
+            "claims",
+            F.lit(0.0),
+            lambda acc, c: acc + w(c) * (c["value_num"] - v) ** 2 / F.col("denom"),
+        )
+
+    return (
+        matrix.join(F.broadcast(maps), "bucket_id")
+        .withColumn("truth_str", F.when(~is_num, _best("cand_str", vote)))
+        .withColumn("truth_num", F.when(is_num, _best("cand_num", loss)))
+        .drop("w")
     )
 
 
-def _weight_step(
-    claims_flagged: DataFrame,
-    cat_truth: DataFrame,
-    num_truth: DataFrame,
-    all_sources: DataFrame,
-) -> DataFrame:
-    loss_expr = F.when(
-        F.col("__isnum"),
-        (F.col("value_num") - F.col("truth_num")) ** 2 / F.col("denom"),
-    ).otherwise((F.col("value_str") != F.col("truth_str")).cast("double"))
+def _weights(facts: DataFrame) -> DataFrame:
+    """weights_i from the per-claim losses against the truth ``facts``
+    carries: the one per-iteration shuffle, of |sources|·|buckets| rows.
+    Every claim is exploded, so every (bucket, source) pair that claims
+    anything gets a weight (0.0 when it lost nothing, as in the reference)."""
+    c = F.col("c")
+    loss = F.when(
+        F.col("is_num"), (c["value_num"] - F.col("truth_num")) ** 2 / F.col("denom")
+    ).otherwise((c["value_str"] != F.col("truth_str")).cast("double"))
     raw = (
-        claims_flagged.join(
-            _truth_union(cat_truth, num_truth), [*FACT_KEYS, "__isnum"]
-        )
-        .select(*WEIGHT_KEYS, loss_expr.alias("loss"))
-        .groupBy(*WEIGHT_KEYS)
+        facts.select("bucket_id", F.explode("claims").alias("c"), loss.alias("loss"))
+        .groupBy("bucket_id", c["source"].alias("source"))
         .agg(F.sum("loss").alias("raw"))
     )
-    # Sources silent in a bucket never enter update_w in the reference either;
-    # right-join against the source dim keeps them present with raw=0 so the
-    # weights table is total (reference w starts at zeros and stays 0).
-    raw = all_sources.join(raw, WEIGHT_KEYS, "left").fillna({"raw": 0.0})
-    # Per-bucket normalizer as a broadcast dim, not a window: the window
-    # re-shuffled+sorted the |sources|x|buckets| table by bucket_id every
-    # iteration; the tiny totals agg reuses raw's exchange (ReusedExchange)
-    # and broadcast-joins back — nothing moves but |buckets| rows.
+    # Per-bucket normalizer as a broadcast dim, not a window: nothing moves
+    # but |buckets| rows.
     totals = raw.groupBy("bucket_id").agg(F.sum("raw").alias("__tot"))
     return raw.join(F.broadcast(totals), "bucket_id").select(
         *WEIGHT_KEYS,
@@ -125,109 +140,36 @@ def _weight_step(
     )
 
 
-def _truth_step(
-    cat: DataFrame, num_with_denom: DataFrame, weights: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Truth update WITHOUT the candidate x claim self-join.
-
-    Reference semantics (crh.py:65-89): categorical argmax over distinct v
-    of sum w*1[claim=v]; numeric argmin over claimed v of
-    sum w*(v-claim)^2/denom. Both collapse to per-fact aggregates — the
-    100 TB shape:
-
-      categorical: argmax_v sum w*1[claim=v] is just the weight sum per
-        claimed value (the reference's own formula — no candidate join).
-      numeric: sum w*(c-v)^2/d = A - 2cB + c^2*C with A=sum(w*v^2)/d,
-        B=sum(w*v)/d, C=sum(w)/d — three sums per fact, then a projection
-        over the distinct claimed values (algebraically identical loss).
-
-    The round-1 implementation materialized the claims x candidates
-    fan-out (up to |sources|^2 rows per fact) and its iterations scaled at
-    ~0.5 efficiency 2->8 cores; this shape is one grouped agg + one
-    fact-key join per branch. Argmax/argmin run as min_by over
-    struct(score, value) — a hash aggregate with map-side partial combine —
-    instead of a row_number window, which re-sorted the fact partition
-    every iteration (round 3; same pinned ascending-value ties).
-    Mixed-type facts score branches independently (one truth row per
-    branch).
-    """
-    bw = F.broadcast(weights)
-    cat_scored = (
-        cat.join(bw, WEIGHT_KEYS)
-        .groupBy(*FACT_KEYS, "value_str")
-        .agg(F.sum("weight").alias("wsum"))
-    )
-    cat_truth = cat_scored.groupBy(*FACT_KEYS).agg(
-        F.min_by(
-            "value_str", F.struct((-F.col("wsum")).alias("k1"), F.col("value_str"))
-        ).alias("truth_str")
-    )
-
-    numw = num_with_denom.join(bw, WEIGHT_KEYS).select(
-        *FACT_KEYS, "value_num", "denom", "weight"
-    )
-    aggs = numw.groupBy(*FACT_KEYS).agg(
-        F.sum(F.col("weight") * F.col("value_num") ** 2 / F.col("denom")).alias("__A"),
-        F.sum(F.col("weight") * F.col("value_num") / F.col("denom")).alias("__B"),
-        F.sum(F.col("weight") / F.col("denom")).alias("__C"),
-    )
-    cands = numw.select(*FACT_KEYS, "value_num").distinct()
-    loss = (
-        F.col("__A")
-        - 2 * F.col("value_num") * F.col("__B")
-        + F.col("value_num") ** 2 * F.col("__C")
-    )
-    num_truth = (
-        cands.join(aggs, FACT_KEYS)
-        .groupBy(*FACT_KEYS)
-        .agg(
-            F.min_by(
-                "value_num", F.struct(loss.alias("k1"), F.col("value_num"))
-            ).alias("truth_num")
-        )
-    )
-    return cat_truth, num_truth
-
-
 def fuse_crh(
     claims: DataFrame, max_itr: int = 10, eps: float = 0.1
 ) -> FusionResult:
     """Run CRH over a long-form claims DataFrame (all buckets vectorized).
 
-    Driver-loop efficiency: per iteration we materialize ONLY the weights
-    table (|sources|·|buckets| rows — tiny) via localCheckpoint; the truth
-    DataFrames stay lazy. Lineage depth stays constant anyway because
-    truth_i = f(cached claims, checkpointed weights_i) and
-    weights_{i+1} = f(cached claims, truth_i) — one materializing job per
-    iteration instead of three, and the big per-fact truth table is never
-    shuffled to storage mid-loop.
+    The claim matrix is built and checkpointed once. Iteration i
+    checkpoints weights_i (computed from truth_{i-1}) and frees weights_{i-1};
+    truth_i stays a lazy projection of the matrix that the next weight step
+    (or the final checkpoint) evaluates, so it is never materialised inside
+    the loop. Before returning, the matrix is freed: the returned truth and
+    weights are both checkpoints of their own.
     """
-    # Materialize the claims once at the loop root. localCheckpoint (not
-    # cache): a cached-but-unmaterialized extraction lineage makes every
-    # iteration's plan re-derive through the full upstream plan — measured
-    # 4-6x slower per iteration than iterating over a severed LogicalRDD.
-    # On a real cluster this is the stage boundary you'd write to Iceberg.
-    claims = checkpoint(claims)
-    cat, num = split_claims(claims)
-    num_with_denom = num.join(fact_stddev(num, eps), FACT_KEYS)
-    all_sources = claims.select(*WEIGHT_KEYS).distinct()
-    claims_flagged = _flag_claims(cat, num_with_denom)
+    spark = claims.sparkSession
+    matrix = checkpoint(_claim_matrix(claims, eps))
 
-    cat_truth = mode_per_fact(cat)
-    num_truth = median_per_fact(num)
-
-    rot = CheckpointRotator(claims.sparkSession)
+    rot = CheckpointRotator(spark, keep=1)
+    facts = matrix  # carries the initial truth
     weights = None
     for _ in range(max_itr):
-        weights = rot.rotate(
-            _weight_step(claims_flagged, cat_truth, num_truth, all_sources)
-        )
-        cat_truth, num_truth = _truth_step(cat, num_with_denom, weights)
+        weights = rot.rotate(_weights(facts))
+        facts = _truth(matrix, weights)
 
     if weights is None:  # max_itr == 0 -> init truth, uniform weights
-        weights = all_sources.select(*WEIGHT_KEYS, F.lit(0.0).alias("weight"))
+        weights = rot.rotate(
+            matrix.select("bucket_id", F.explode("claims.source").alias("source"))
+            .distinct()
+            .withColumn("weight", F.lit(0.0))
+        )
 
-    # materialize the final truth once: every consumer (triples write, eval,
-    # weights diagnostics) would otherwise replay the argmax joins
-    truth = checkpoint(assemble_truth(cat_truth, num_truth))
+    is_num = F.col("is_num")
+    truth = checkpoint(assemble_truth(facts.filter(~is_num), facts.filter(is_num)))
+    release_rdds(spark, {checkpoint_rdd_id(matrix)})
     return FusionResult(truth=truth, weights=weights)
